@@ -533,7 +533,12 @@ object CorpusPipeline {
         * bytes are bounded by shardBytes × touched shards, closing the
         * last gate component that was O(corpus) in one JVM object.
         */
-      val bloomShardsBcast: Option[Array[org.apache.spark.broadcast.Broadcast[Array[Byte]]]] = None) {
+      val bloomShardsBcast: Option[Array[org.apache.spark.broadcast.Broadcast[Array[Byte]]]] = None,
+      /** banded (id, band, bucket) rows at freeze time — the sum of the
+        * bucket occupancies; fewer than rows × bands when some docs carry
+        * no signature (no text). 0 without banding.
+        */
+      val bandedRows: Long = 0L) {
     /** the monolithic filter (probe via [[bloomBcast]] where possible);
       * defined iff the freeze did NOT shard the key space
       */
@@ -620,8 +625,7 @@ object CorpusPipeline {
       * constant involved.
       */
     def prunedBandedProfitable(probes: Seq[Any]): Option[DataFrame] =
-      if (probes.size.toLong * CorpusPipeline.BandedRowGroupRows >=
-            rows * bandedBands) None
+      if (probes.size.toLong * CorpusPipeline.BandedRowGroupRows >= bandedRows) None
       else prunedBanded(probes)
     /** whether the pruned-probe fast path is available at all */
     def hasSideFiles: Boolean = sideDir.isDefined
@@ -728,13 +732,11 @@ object CorpusPipeline {
     // recompute-after-append would silently read the mutated target
     // mid-window. Blocks die with their executor; a lost block fails the
     // batch and the next one re-freezes (same recovery story as the delta
-    // checkpoint parts).
-    val slim = embeddings.fold(base)(e => base.join(
-        e.select(col(cfg.idCol).as("__id"), col(cfg.embCol).as("__emb")),
-        Seq("__id"), "left"))
-      .localCheckpoint()
+    // checkpoint parts). The checkpoint job counts the rows on the way.
+    val (slim, rows) = Checkpoints.checkpointCounted(embeddings.fold(base)(e =>
+      base.join(e.select(col(cfg.idCol).as("__id"), col(cfg.embCol).as("__emb")),
+        Seq("__id"), "left")))
     try {
-      val rows = slim.count() // cheap: counts the checkpointed blocks
       // the Bloom prefilter: monolithic below the shard point, KEY-SPACE
       // SHARDED above it (or when the caller pins a shard count) — a
       // monolithic filter is one driver/executor object that grows with
@@ -760,8 +762,8 @@ object CorpusPipeline {
           // localized hot set (only slim rides the outer catch)
           (Some(bloom), Some(BloomDedup.broadcastFilter(slim.sparkSession, bloom)), None)
         }
-      val (bnd, hot, maxNonHot) =
-        if (!withBanded) (None, None, None)
+      val (bnd, hot, maxNonHot, bandedRows) =
+        if (!withBanded) (None, None, None, 0L)
         else {
           // the refresh-amortized banding: explode once, persist; the hot
           // set's groupBy shuffle (the per-batch cost center the frozen
@@ -785,12 +787,15 @@ object CorpusPipeline {
               val hotLocal = graft.core.Checkpoints.localize(
                 occ.filter(col("__bsz") > maxBucketSize)
                   .select(col("__band"), col("__bucket")))
-              val nonHotMax = occ.filter(col("__bsz") <= maxBucketSize)
-                .agg(max(col("__bsz"))).head() match {
-                case r if r.isNullAt(0) => 0L // every bucket hot (or none)
-                case r => r.getLong(0)
-              }
-              (Some(banded), Some(hotLocal), Some(nonHotMax))
+              // one pass over the occupancy: the densest non-hot bucket,
+              // and the banded row count (docs without a signature have
+              // no banded rows, so it is not rows × bands)
+              val stats = occ.agg(
+                max(when(col("__bsz") <= maxBucketSize, col("__bsz"))),
+                sum(col("__bsz"))).head()
+              // null max: every bucket hot (or none)
+              def orZero(i: Int) = if (stats.isNullAt(i)) 0L else stats.getLong(i)
+              (Some(banded), Some(hotLocal), Some(orZero(0)), orZero(1))
             } finally occ.unpersist(blocking = false)
           } catch {
             case t: Throwable => banded.unpersist(blocking = false); throw t
@@ -868,7 +873,7 @@ object CorpusPipeline {
           }
         new FrozenCorpus(slim, rows, bloomOpt, withSignatures, embeddings.isDefined,
           bnd, hot, bands, numHashes, maxBucketSize, maxNonHot, side,
-          bloomBcOpt, pfxParts, shardsBcOpt)
+          bloomBcOpt, pfxParts, shardsBcOpt, bandedRows)
       } catch {
         // a failed side write (or constructor) must not leak the banded
         // cache, the localized hot set, or the broadcast filter (slim's
@@ -881,9 +886,9 @@ object CorpusPipeline {
           throw t
       }
     } catch {
-      // the count and the filter build are real actions — a transient
-      // failure there must not pin corpus-keys-sized checkpoint blocks
-      // nobody holds a handle to
+      // the filter build and the banded pass are real actions — a
+      // transient failure there must not pin corpus-keys-sized checkpoint
+      // blocks nobody holds a handle to
       case t: Throwable => graft.core.Checkpoints.release(slim); throw t
     }
   }

@@ -33,21 +33,21 @@ object MinHashLsh {
     */
   private val CandidateIdPushdownCap = 8192
 
-  /** Max distinct batch bucket values driver-collected for the pruned
-    * frozen-banded probe (matches FrozenCorpus.sideProbeCap — the pruned
-    * read itself refuses larger sets); above it the funnel streams the
-    * cached banded frame as before.
+  /** Max batch (band, bucket) occupancy rows driver-collected per frozen-
+    * banded funnel call (matches FrozenCorpus.sideProbeCap — the pruned
+    * read itself refuses larger probe sets); above it the funnel streams
+    * the cached banded frame and localizes the hot set as a query.
     */
   private val BucketProbeCap = 1 << 16
 
   /** Distinct values of `colNames` read DRIVER-SIDE from an
     * already-localized survivor frame — zero Spark jobs: after
-    * [[Checkpoints.localize]] the frame is a LocalRelation whose rows sit
-    * on the driver, so extracting the candidate ids must not cost a
-    * LocalTableScan job per funnel call (it did, briefly — a measurable
-    * per-call constant at micro scale). None when the frame took the
-    * >4M-pair checkpoint fallback (not local) or the id set exceeds the
-    * cap — callers then keep the semi-join, which never needed the ids.
+    * [[Checkpoints.localize]] (one bounded collect job) the frame is a
+    * LocalRelation whose rows sit on the driver, so extracting the
+    * candidate ids must not cost a LocalTableScan job of its own. None
+    * when the frame took the >4M-row checkpoint fallback (not local) or
+    * the id set exceeds the cap — callers then keep the semi-join, which
+    * never needed the ids.
     */
   private def localizedIds(df: DataFrame, colNames: Seq[String],
                            cap: Int): Option[Seq[Any]] = {
@@ -76,6 +76,33 @@ object MinHashLsh {
         }
       case _ => None
     }
+  }
+
+  /** The (band, bucket) pairs of a driver-local hot set, read with zero
+    * jobs — None unless `hot` is a (`__band` int, `__bucket` long)
+    * LocalRelation, the shape a [[Checkpoints.localize]]d hot set has.
+    */
+  private def localHotPairs(hot: DataFrame): Option[Seq[(Int, Long)]] = {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    hot.queryExecution.analyzed match {
+      case lr: LocalRelation =>
+        val b = lr.output.indexWhere(a => a.name == "__band" && a.dataType == IntegerType)
+        val k = lr.output.indexWhere(a => a.name == "__bucket" && a.dataType == LongType)
+        if (b < 0 || k < 0) None
+        else Some(lr.data.map(r => (r.getInt(b), r.getLong(k))))
+      case _ => None
+    }
+  }
+
+  /** A driver-local (`__band`, `__bucket`) relation over `pairs` — no job. */
+  private def hotFrame(spark: org.apache.spark.sql.SparkSession,
+                       pairs: Seq[(Int, Long)]): DataFrame = {
+    import org.apache.spark.sql.types._
+    org.apache.spark.sql.graft.ExecutionBridge.ofLocalRows(spark,
+      StructType(Seq(StructField("__band", IntegerType, nullable = false),
+        StructField("__bucket", LongType, nullable = false))),
+      pairs.map { case (b, bkt) => org.apache.spark.sql.catalyst.InternalRow(b, bkt) })
   }
 
   /** k-element MinHash signature over a pre-hashed shingle column
@@ -118,8 +145,8 @@ object MinHashLsh {
     * duration of the candidate search — ~0.5 KB/doc, ~50 GB cluster-wide for
     * a 100M-doc corpus — then explicitly unpersisted once the (small)
     * estimate-survivor set has been materialized into a driver-local
-    * relation ([[graft.core.Checkpoints.localize]], scratch blocks freed
-    * before return).
+    * relation ([[graft.core.Checkpoints.localize]], one bounded collect
+    * that writes no blocks).
     * The returned frame therefore holds no cached state: downstream actions
     * re-read only the candidate documents' shingles (semi-join pushdown),
     * never the full corpus. The call does eager work proportional to
@@ -190,8 +217,8 @@ object MinHashLsh {
       // materialize the survivor set (∝ near-dup pairs, tiny vs corpus) so
       // the signature cache can be released now instead of leaking past the
       // call; `localize` hands back a driver-local relation with ZERO
-      // block-store footprint (checkpoint blocks freed before return),
-      // falling back to a plain checkpoint only above its 4M-pair guard
+      // block-store footprint (one bounded collect job), falling back to a
+      // checkpoint only above its 4M-pair guard
       try Checkpoints.localize(survivors)
       finally sigs.unpersist(false)
     }
@@ -348,19 +375,27 @@ object MinHashLsh {
     // time, zero jobs) when available, else derived from the delta sigs
     val blD = deltaBanded.orElse(deltaSigs.map(d => bandedFrame(d, bands, numHashes)))
     val br0 = bandedFrame(sr, bands, numHashes)
-    // PRUNED frozen banding: the batch's touched bucket values are a small
-    // driver-collectable set (≤ rows × bands), and the candidate join only
-    // ever matches frozen rows in THOSE buckets — so when the freeze wrote
-    // a bucket-sorted side file, read it pruned to the probe set instead
-    // of streaming the whole cached banded frame through the join. One
-    // extra small job (the probe collect, off the already-persisted batch
-    // signatures); identical candidates by construction.
-    val frozenBandedEff = prunedBandedFor.flatMap { f =>
-      val probes = br0.select(col("__bucket")).distinct()
-        .limit(BucketProbeCap + 1).collect()
-      if (probes.length > BucketProbeCap) None
-      else f(probes.map(_.get(0)).toSeq)
-    }.getOrElse(frozenBanded)
+    // the batch's (band, bucket, count) occupancy, driver-collected in ONE
+    // bounded job off the already-persisted batch signatures (≤ rows ×
+    // bands rows; None above the cap). It serves two consumers:
+    //   - PRUNED frozen banding: the candidate join only ever matches
+    //     frozen rows in the batch's buckets — so when the freeze wrote a
+    //     bucket-sorted side file, read it pruned to those bucket values
+    //     instead of streaming the whole cached banded frame through the
+    //     join; identical candidates by construction;
+    //   - the batch side of the hot set (buckets whose batch count alone
+    //     exceeds the cap), read off the counts with no groupBy job.
+    val batchOcc: Option[IndexedSeq[(Int, Long, Long)]] =
+      if (prunedBandedFor.isEmpty && maxBucketSize <= 0L) None
+      else Checkpoints.collectBounded(
+          br0.groupBy(col("__band"), col("__bucket")).agg(count(lit(1))),
+          BucketProbeCap)
+        .map(_.map(r => (r.getInt(0), r.getLong(1), r.getLong(2))))
+    val frozenBandedEff = (for {
+      f <- prunedBandedFor
+      occ <- batchOcc
+      pruned <- f(occ.map(o => o._2: Any).distinct)
+    } yield pruned).getOrElse(frozenBanded)
     val bl0 = blD.fold(frozenBandedEff)(frozenBandedEff.unionByName(_))
     val (bl, br, releaseHot) =
       if (maxBucketSize <= 0L) (bl0, br0, () => ())
@@ -410,17 +445,30 @@ object MinHashLsh {
               .select(col("__band"), col("__bucket"))
           }
         }
-        // ONE action: the full hot set is tiny (pathological buckets only),
-        // so localize it — both anti-joins then broadcast a precomputed
-        // LocalRelation instead of re-running the crossing/count subplans
-        // once per consuming join (measured 2× the whole funnel's cost)
-        val hot = Checkpoints.localize(
-          crossing.fold(frozenHot)(frozenHot.union(_))
-            .union(hotBucketsOf(br0, maxBucketSize)).distinct())
+        // the full hot set is tiny (pathological buckets only) and both
+        // anti-joins consume it, so it must be a driver-local relation —
+        // re-running the crossing/count subplans once per consuming join
+        // measured 2× the whole funnel's cost. The steady state builds it
+        // on the driver with ZERO jobs: no suspect bucket (crossing None),
+        // the frozen hot set already local, and the batch side read off
+        // the occupancy counts. Any other case localizes the union (one
+        // bounded collect), with the batch side still driver-built when
+        // the occupancy collect stayed under its cap.
+        val batchHot = batchOcc.map(_.collect {
+          case (b, bkt, n) if n > maxBucketSize => (b, bkt)
+        })
+        val hot = (for {
+          bh <- batchHot if crossing.isEmpty
+          fh <- localHotPairs(frozenHot)
+        } yield hotFrame(spark, (fh ++ bh).distinct)).getOrElse(
+          Checkpoints.localize(
+            crossing.fold(frozenHot)(frozenHot.union(_))
+              .union(batchHot.fold(hotBucketsOf(br0, maxBucketSize))(hotFrame(spark, _)))
+              .distinct()))
         (bl0.join(hot, Seq("__band", "__bucket"), "left_anti"),
          br0.join(hot, Seq("__band", "__bucket"), "left_anti"),
-         // localize falls back to a bare localCheckpoint above its row
-         // guard (pathological corpora where most buckets are hot) — those
+         // localize falls back to a checkpoint above its row guard
+         // (pathological corpora where most buckets are hot) — those
          // blocks must die with this call, not with the session. The hot
          // frame is fully consumed by bipartiteTail's eager survivor
          // materialization; the frame it RETURNS references only the
@@ -488,8 +536,9 @@ object MinHashLsh {
     // `leftDocs`: even constructing the verify join would touch the left
     // source (file listing / schema read), and the frozen-corpus ingest
     // path's contract is that a clean batch gates with zero corpus I/O.
-    // `estimated` is already materialized (localize), so the probe is free.
-    if (estimated.isEmpty)
+    // `estimated` is already materialized (localize), so the probe reads
+    // its driver-local rows — no job and no execution.
+    if (Checkpoints.isEmpty(estimated))
       return estimated.withColumn("jaccard", lit(0.0))
         .select(col("id_left"), col("id_right"), col("jaccard"))
     // Left-side candidate fetch: a semi-join restricts the ROWS shingled

@@ -338,11 +338,18 @@ object CorpusIngestSink {
     * scheduled refresh) — co-writers needing stronger guarantees need
     * per-batch gating.
     *
-    * WHEN TO USE — the trade is scan avoidance vs fixed bookkeeping: per
-    * admitted batch the gate pays one extra collect job (the delta fold;
-    * driver-resident rows rebuild into ONE LocalRelation per side, so the
-    * gate plan stays flat across the refresh window), and in exchange
-    * skips the per-batch corpus scan. Measured at sf0.1/local[32] (corpus ≈ 4k
+    * WHEN TO USE — the trade is scan avoidance vs fixed bookkeeping. A
+    * steady batch is a chain of driver round trips, each one SQL
+    * execution: with side files, the Bloom sliver collect, the banded
+    * occupancy probe, the candidate and survivor collects, one counted
+    * checkpoint of the admitted rows (the funnel's remaining joins run in
+    * its job), the append and the delta fold's collect — seven executions
+    * (a batch with estimate survivors adds one schema-listing job for the
+    * verify read). The funnel's hot-bucket set costs no job while no
+    * delta bucket can cross the cap; the fold's driver-resident
+    * rows rebuild into ONE LocalRelation per side, so the gate plan stays
+    * flat across the refresh window. In exchange the gate skips the
+    * per-batch corpus scan. Measured at sf0.1/local[32] (corpus ≈ 4k
     * docs) the bookkeeping DOMINATES — per-batch gating is ~2× faster —
     * because scanning a few thousand cached rows is cheaper than any
     * fixed job overhead. The gate is for the regime it was built for:
@@ -566,9 +573,13 @@ object CorpusIngestSink {
       // task time per admitted batch at 400k docs). A localCheckpoint has
       // no CacheManager entry, so the append cannot invalidate it, and it
       // pins the gated snapshot the way the fold semantically requires.
-      val accepted = accepted0.localCheckpoint()
+      // Checkpoint and count are ONE job, inside the try: the gate's
+      // funnel runs in that job, so a failure there must still release
+      // the batch's cached frames.
+      var accepted: DataFrame = null
       try {
-        val n = accepted.count()
+        val (checkpointed, n) = graft.core.Checkpoints.checkpointCounted(accepted0)
+        accepted = checkpointed
         if (n > 0L) {
           preAppendTap()
           // pre-append re-check: the pre-gate fingerprint check and this
@@ -622,7 +633,7 @@ object CorpusIngestSink {
           // rows' exact keys, signatures, and (when the semantic arm is
           // on) embeddings together — key/sig/emb frames are then free
           // column slices of the same local relation, so the per-batch
-          // bookkeeping is a single localCheckpoint job, not three (the
+          // bookkeeping is a single collect job, not three (the
           // fixed-overhead term that dominates the gate below the
           // corpus-size crossover; see the FrozenGate scaladoc)
           import org.apache.spark.sql.functions.{col => c}
@@ -646,7 +657,7 @@ object CorpusIngestSink {
               base.join(cfg.embeddings.get.select(c(cfg.idCol).as("__id"),
                 c(cfg.embCol).as("__emb")), Seq("__id"), "left")
             else base
-          // `accepted` is persisted and already counted, so when the batch
+          // `accepted` is checkpointed and already counted, so when the batch
           // is driver-safe the fold is ONE collect off the cache into a
           // local relation. The collect guard is BYTE-aware, not row-count:
           // a collected row costs rowShell + ~32 B per boxed signature/
@@ -717,7 +728,7 @@ object CorpusIngestSink {
         n
       } finally {
         releaseBatch()
-        graft.core.Checkpoints.release(accepted)
+        if (accepted != null) graft.core.Checkpoints.release(accepted)
       }
     }
 

@@ -38,3 +38,52 @@ object ListenerBridge {
                                 timeoutMillis: Long = 30000L): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMillis)
 }
+
+/** Bridge into the `private[sql]` machinery Dataset actions run on, so an
+  * engine materialization that is not a plain Dataset action (a bounded
+  * collect, a counted checkpoint — [[graft.core.Checkpoints]]) still runs
+  * as ONE tracked SQL execution and hands its rows back as ordinary frames.
+  */
+object ExecutionBridge {
+  import org.apache.spark.rdd.RDD
+  import org.apache.spark.sql.{DataFrame, Row}
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+  import org.apache.spark.sql.catalyst.types.DataTypeUtils
+  import org.apache.spark.sql.classic.Dataset
+  import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution, SparkPlan}
+  import org.apache.spark.sql.types.StructType
+
+  private def classic(df: DataFrame): Dataset[Row] = df.asInstanceOf[Dataset[Row]]
+
+  /** Run `body` over `df`'s executed physical plan inside one SQL
+    * execution named `name` — the wrapper every Dataset action uses, so
+    * query execution listeners, the SQL tab and planning-time trackers see
+    * it like any collect.
+    */
+  def withAction[T](df: DataFrame, name: String)(body: SparkPlan => T): T = {
+    val qe = classic(df).queryExecution
+    SQLExecution.withNewExecutionId(qe, Some(name)) {
+      qe.executedPlan.resetMetrics()
+      body(qe.executedPlan)
+    }
+  }
+
+  /** A frame over `rdd`, an already-computed copy of `df`'s rows — the
+    * shape `Dataset.localCheckpoint` returns (partitioning, ordering and
+    * statistics carried over from `df`).
+    */
+  def ofRdd(df: DataFrame, rdd: RDD[InternalRow]): DataFrame = {
+    val ds = classic(df)
+    Dataset.ofRows(ds.sparkSession, LogicalRDD.fromDataset(rdd, ds, ds.isStreaming))
+  }
+
+  /** A driver-local relation holding `rows` (catalyst rows matching
+    * `schema`), with fresh attributes as `createDataFrame` gives — no job,
+    * no block-store state, and no external-row conversion.
+    */
+  def ofLocalRows(spark: org.apache.spark.sql.SparkSession, schema: StructType,
+                  rows: Seq[InternalRow]): DataFrame =
+    Dataset.ofRows(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+}

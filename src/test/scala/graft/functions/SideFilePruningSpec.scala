@@ -155,6 +155,29 @@ class SideFilePruningSpec extends SparkSpec {
     } finally frozen.release()
   }
 
+  test("the break-even counts banded rows, not rows × bands, when docs lack a signature") {
+    // 1900 of 2000 docs carry no text (the shape of an embeddings-only
+    // share of a corpus): no signature, so no banded rows — text shorter
+    // than one shingle still hashes as one shingle and is signed. 100
+    // signed docs × 16 bands = 1600 banded rows, so even one probe (≈ one
+    // 10k-row group) reads more than the whole side file
+    val dir = Files.createTempDirectory("sfp_unsigned").toString
+    val mixed = corpus(2000).withColumn("text",
+      when(col("doc_id") < 1900L, lit(null).cast("string")).otherwise(col("text")))
+    val frozen = CorpusPipeline.freezeCorpus(mixed, cfg,
+      withBanded = true, sideFileDir = Some(dir), sideFileMinRows = 0L,
+      sideFilePartitions = 8)
+    try {
+      val (bnd, _) = frozen.banded.get
+      assert(frozen.rows == 2000L)
+      assert(frozen.bandedRows == bnd.count(), "the freeze records the banded row count")
+      assert(frozen.bandedRows == 100L * 16L)
+      val bucket = bnd.select("__bucket").as[Long].head()
+      assert(frozen.prunedBandedProfitable(Seq(bucket)).isEmpty,
+        "one probe already reads past 1600 banded rows — the cached frame must serve it")
+    } finally frozen.release()
+  }
+
   test("thousands of probes survive and stay exact (native parquet In, no OR-chain)") {
     // regression guard for the r18 finding: with the default threshold,
     // >10 values push as parquet's NATIVE set-based In — raising

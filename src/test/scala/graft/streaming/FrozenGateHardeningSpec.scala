@@ -156,4 +156,31 @@ class FrozenGateHardeningSpec extends SparkSpec {
     } finally g.close()
     assert(corpusIds(dir) == Seq(1L, 2L, 12L, 22L))
   }
+
+  test("a failure inside the gate's checkpoint job still releases the batch's caches") {
+    // the verify stage scans the corpus text only for estimate survivors,
+    // and it runs inside the job that checkpoints the admitted rows: a
+    // corpus frame that throws when scanned fails exactly that job
+    val dir = Files.createTempDirectory("fg_cpfail").toString
+    @volatile var armed = false
+    val boom = org.apache.spark.sql.functions.udf((t: String) => {
+      if (t != null) throw new IllegalStateException("verify scan failed"); t
+    })
+    val reader = (s: org.apache.spark.sql.SparkSession, d: String, donor: DataFrame) => {
+      val standing = CorpusIngestSink.standingOf(s, d, donor)
+      if (armed) standing.withColumn("text", boom(standing("text"))) else standing
+    }
+    val g = new CorpusIngestSink.FrozenGate(dir, cfg, refreshEvery = 10, corpusReader = reader)
+    try {
+      assert(g.processBatch(df(1L -> baseA, 2L -> baseB)) == 2L)
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      armed = true
+      val e = intercept[Exception](g.processBatch(df(30L -> (baseA + " quietly"))))
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(causes.exists(c => String.valueOf(c.getMessage).contains("verify scan failed")),
+        s"the batch must fail in the verify scan, got $e")
+      assert(spark.sparkContext.getPersistentRDDs.keySet.toSet == before,
+        "a failed checkpoint job must not leave the batch's frames persisted")
+    } finally g.close()
+  }
 }
